@@ -22,17 +22,40 @@ is the useful half of the tradeoff — Spark's CacheManager substitutes
 the cached plan into OTHER queries that build an identical subtree,
 which is semantically transparent (same plan ⇒ same values) and saves
 their scan too.
+
+Session-state policy, the one the whole package follows (``session.py``
+states it for confs). State a query leaves in the driver's session lives for one Spark
+application and is released afterwards, like the reference's in-memory
+table, built once per process (``PureJavaTest.java:12``):
+
+  * cached frames — ``scoped_persist`` (one live frame per call site) and
+    ``session_memo`` (one frame per key, shared by every query that asks
+    for it) — sit in the one ``_LIVE`` dict below, tagged with the
+    application that cached them;
+  * session confs a query needs are set only inside
+    ``session.scoped_conf``;
+  * files go under ``sources.io._scoped_scratch`` (one directory per
+    name and application, under the one ``.tmp`` root ``io._SCRATCH``).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-# site -> (applicationId, cached frame)
-_LIVE: dict[str, tuple[str, DataFrame]] = {}
+# scoped_persist site (a str) or session_memo key (a tuple)
+#   -> (applicationId, cached frame)
+_LIVE: dict[Hashable, tuple[str, DataFrame]] = {}
+
+
+def _release(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # its session already stopped; nothing to release
 
 
 def scoped_persist(
@@ -47,12 +70,33 @@ def scoped_persist(
     consuming job filling the cache as a side effect."""
     prev = _LIVE.pop(site, None)
     if prev is not None:
-        try:
-            prev[1].unpersist()
-        except Exception:
-            pass  # previous session already stopped; nothing to release
+        _release(prev[1])
     out = df.persist(level)
     _LIVE[site] = (spark.sparkContext.applicationId, out)
+    return out
+
+
+def session_memo(
+    spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame ``build()`` returned for ``key`` in this Spark
+    application, building it on the first call. ``build`` caches the frame
+    itself, so each caller keeps its own storage level.
+
+    Keyed by applicationId (stable, never reused within a machine epoch —
+    unlike ``id(spark)``, which Python can recycle after GC and would then
+    serve a frame bound to a dead session). On a miss, every entry another
+    application cached is unpersisted and dropped: only one SparkContext
+    can be live in a process, so those entries are dead and the dict
+    cannot grow without bound."""
+    app_id = spark.sparkContext.applicationId
+    hit = _LIVE.get(key)
+    if hit is not None and hit[0] == app_id:
+        return hit[1]
+    for k in [k for k, (a, _) in _LIVE.items() if a != app_id]:
+        _release(_LIVE.pop(k)[1])
+    out = build()
+    _LIVE[key] = (app_id, out)
     return out
 
 

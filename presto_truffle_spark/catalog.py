@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_truffle_spark.session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -83,27 +85,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Cast when the plan resolves, so force analysis under UTC and
             # restore the driver's own zone afterwards — loading a table
             # must not clobber session state the driver relies on.
-            prev_tz = spark.conf.get("spark.sql.session.timeZone")
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            try:
+            with scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"}):
                 df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
                 df.schema  # resolve NOW: Cast captures UTC here
-            finally:
-                spark.conf.set("spark.sql.session.timeZone", prev_tz)
             import sys
 
             print(
                 "load_table(events): LTZ fixture detected; ts cast to "
-                "TIMESTAMP_NTZ under a scoped UTC pin (session zone "
-                f"restored to {prev_tz})",
+                "TIMESTAMP_NTZ under a scoped UTC pin (session zone restored)",
                 file=sys.stderr,
             )
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from presto_truffle_spark.cache import session_memo
 from presto_truffle_spark.catalog import load_table, register_views
 from presto_truffle_spark.registry import query
 
@@ -227,9 +228,6 @@ def udf_row_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select("p_partkey", weird_score("p_name", "p_size").alias("weird_score"))
 
 
-_CACHED_SCAN_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 @query(
     "cached_columnar_scan",
     oracle="""
@@ -245,20 +243,13 @@ def cached_columnar_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the table. Memoized per (session, sf_dir) with stale-session
     eviction — calling ``.cache()`` per invocation leaked one cached copy
     per call in a long-lived service (r1 verdict hygiene note)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _CACHED_SCAN_MEMO:
-        for old_key in [k for k in _CACHED_SCAN_MEMO if k[0] != app_id]:
-            try:
-                _CACHED_SCAN_MEMO.pop(old_key).unpersist()
-            except Exception:
-                pass  # old session already stopped
-        _CACHED_SCAN_MEMO[key] = (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_extendedprice")
-            .cache()
-        )
-    li = _CACHED_SCAN_MEMO[key]
+    li = session_memo(
+        spark,
+        ("cached_columnar_scan", sf_dir),
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_extendedprice")
+        .cache(),
+    )
     return li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
         F.count(F.lit(1)).alias("n"),

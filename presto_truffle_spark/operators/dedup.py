@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from presto_truffle_spark.cache import session_memo
 from presto_truffle_spark.catalog import load_table
 from presto_truffle_spark.registry import query
 
@@ -170,9 +171,6 @@ def _bands_col(sig):
     )
 
 
-_LSH_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
 def _lsh_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Cached LSH tables, memoized per (session, sf_dir) so repeated
     queries share ONE cached copy instead of re-caching per call:
@@ -192,31 +190,29 @@ def _lsh_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     At cluster scale these are the materialized signature tables every
     production LSH pipeline keeps (recomputing shingles per query is how
-    100 TB dedup jobs triple their cost).
+    100 TB dedup jobs triple their cost). Each table is one
+    ``cache.session_memo`` entry."""
 
-    Keyed by applicationId (stable, never reused within a machine epoch —
-    unlike ``id(spark)``, which Python can recycle after GC and would then
-    serve a DataFrame bound to a dead session); stale sessions' entries are
-    evicted and unpersisted so the memo can't grow without bound."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _LSH_MEMO:
-        for old_key in [k for k in _LSH_MEMO if k[0] != app_id]:
-            for df in _LSH_MEMO.pop(old_key).values():
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # old session already stopped; nothing to release
+    def shingles() -> DataFrame:
         d = load_table(spark, sf_dir, "documents").filter(
             F.size(F.split(F.col("text"), " ")) >= _SHINGLE
         )
-        sh = d.select("doc_id", _shingle_hashes_col(_shingles_col()).alias("shingles")).cache()
-        sig = sh.select("doc_id", _minhash_sig_col(F.col("shingles")).alias("sig")).cache()
-        bands = sig.select(
+        return d.select("doc_id", _shingle_hashes_col(_shingles_col()).alias("shingles")).cache()
+
+    sh = session_memo(spark, ("lsh.sh", sf_dir), shingles)
+    sig = session_memo(
+        spark,
+        ("lsh.sig", sf_dir),
+        lambda: sh.select("doc_id", _minhash_sig_col(F.col("shingles")).alias("sig")).cache(),
+    )
+    bands = session_memo(
+        spark,
+        ("lsh.bands", sf_dir),
+        lambda: sig.select(
             "doc_id", F.posexplode(_bands_col(F.col("sig"))).alias("band_idx", "band_hash")
-        )
-        _LSH_MEMO[key] = {"sh": sh, "sig": sig, "bands": bands.cache()}
-    return _LSH_MEMO[key]
+        ).cache(),
+    )
+    return {"sh": sh, "sig": sig, "bands": bands}
 
 
 def _bands_df(spark: SparkSession, sf_dir: str) -> DataFrame:

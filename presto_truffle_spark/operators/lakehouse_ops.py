@@ -28,18 +28,7 @@ from pyspark.sql import functions as F
 
 from presto_truffle_spark.catalog import load_table
 from presto_truffle_spark.registry import query
-
-
-def _scratch(spark: SparkSession, name: str) -> str:
-    """Per-session scratch dir: suffixing with applicationId keeps two
-    concurrent sessions (e.g. the driver and a test run) from clobbering
-    each other's in-flight writes. Delegates to io._scoped_scratch,
-    whose sweep of dead sessions' dirs is AGE-GATED (r9: an app-id
-    mismatch alone doesn't prove the other session is dead — an
-    unconditional sweep deleted a live concurrent session's files)."""
-    from presto_truffle_spark.sources.io import _scoped_scratch
-
-    return _scoped_scratch(spark, name)
+from presto_truffle_spark.sources.io import _scoped_scratch
 
 
 @query(
@@ -73,7 +62,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base table.
     """
     o = load_table(spark, sf_dir, "orders")
-    root = _scratch(spark, "orders_evolving")
+    root = _scoped_scratch(spark, "orders_evolving")
     (
         o.where(F.year("o_orderdate") == 1995)
         .select("o_orderkey", "o_totalprice")
@@ -162,7 +151,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff("o_orderdate", F.lit("1995-01-01")).cast("bigint").alias("y"),
     )
     z = keyed.withColumn("zval", F.expr(_z_spark("x", "y")))
-    path = _scratch(spark, "orders_zorder")
+    path = _scoped_scratch(spark, "orders_zorder")
     (
         z.withColumn("z_bucket", F.expr("CAST(zval >> 20 AS BIGINT)"))
         .write.mode("overwrite")
@@ -203,7 +192,7 @@ def sink_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = keyed.withColumn("zval", F.expr(_z_spark("x", "y"))).withColumn(
         "z_bucket", F.expr("CAST(zval >> 20 AS BIGINT)")
     )
-    path = _scratch(spark, "orders_zorder_incr")
+    path = _scoped_scratch(spark, "orders_zorder_incr")
     base = z.where(F.col("o_orderdate") < F.lit("1999-01-01"))
     incr = z.where(F.col("o_orderdate") >= F.lit("1999-01-01"))
     cols = ["x", "y", "zval", "z_bucket"]
@@ -361,7 +350,7 @@ def lakehouse_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     split = F.lit("1997-01-01")
-    state_path = _scratch(spark, "agg_state_base")
+    state_path = _scoped_scratch(spark, "agg_state_base")
     partials(o.where(F.col("o_orderdate") < split)).write.mode(
         "overwrite"
     ).parquet(state_path)
@@ -449,7 +438,7 @@ def lakehouse_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") % 11 == 0).alias("del"),
         )
     )
-    base_path = _scratch(spark, "merge_target")
+    base_path = _scoped_scratch(spark, "merge_target")
     tgt.write.mode("overwrite").parquet(base_path)
     target = spark.read.parquet(base_path)
     merged = target.join(
@@ -457,7 +446,7 @@ def lakehouse_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         src.filter(~F.col("del")).select("k", "st", "cents")
     )
-    out_path = _scratch(spark, "merge_result")
+    out_path = _scoped_scratch(spark, "merge_result")
     merged.write.mode("overwrite").parquet(out_path)
     back = spark.read.parquet(out_path)
     return back.groupBy("st").agg(
@@ -500,8 +489,6 @@ def lakehouse_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta, with AQE free to broadcast the delta side (no hard hint: a
     backfill delta can be huge — the scale doctrine). Integer quantity
     cents keep the merge exact in any order."""
-    from presto_truffle_spark.sources.io import _scoped_scratch
-
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     qcents = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
@@ -715,9 +702,9 @@ def lakehouse_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 10 == 3)
         ).alias("deleted"),
     )
-    base_path = _scratch(spark, "dv_base")
-    dv_path = _scratch(spark, "dv_sidecar")
-    cow_path = _scratch(spark, "dv_rewritten")
+    base_path = _scoped_scratch(spark, "dv_base")
+    dv_path = _scoped_scratch(spark, "dv_sidecar")
+    cow_path = _scoped_scratch(spark, "dv_rewritten")
     od.select("o_orderkey", "cents").write.mode("overwrite").parquet(
         base_path
     )
@@ -801,8 +788,8 @@ def lakehouse_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    p_clu = _scratch(spark, "depth_clustered")
-    p_uns = _scratch(spark, "depth_unsorted")
+    p_clu = _scoped_scratch(spark, "depth_clustered")
+    p_uns = _scoped_scratch(spark, "depth_unsorted")
     od.repartitionByRange(8, "o_custkey").write.mode("overwrite").parquet(
         p_clu
     )
@@ -905,8 +892,8 @@ def lakehouse_write_audit_publish(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    staging = _scratch(spark, "wap_staging")
-    published = _scratch(spark, "wap_published")
+    staging = _scoped_scratch(spark, "wap_staging")
+    published = _scoped_scratch(spark, "wap_published")
     od.write.mode("overwrite").parquet(staging)
     staged = spark.read.parquet(staging)
     ledger = staged.agg(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_truffle_spark.cache import session_memo
 from presto_truffle_spark.catalog import load_table, register_views
 from presto_truffle_spark.registry import query
 
@@ -45,9 +46,6 @@ _DF_CAP_FRAC = 0.2
 _DF_CAP_ABS = 1000
 _COSINE_THRESHOLD = 0.6
 
-_POSTINGS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Df-capped posting list (doc_id, token), cached and memoized per
     (session, sf_dir) — same pattern as dedup._lsh_tables. Three parts of
@@ -56,14 +54,8 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 1-row corpus-count broadcast) once per consumer. At 100 TB the
     postings table is the materialized inverted index every similarity
     pipeline keeps."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _POSTINGS_MEMO:
-        for old_key in [k for k in _POSTINGS_MEMO if k[0] != app_id]:
-            try:
-                _POSTINGS_MEMO.pop(old_key).unpersist()
-            except Exception:
-                pass  # old session already stopped; nothing to release
+
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         tok = (
             docs.select(
@@ -83,8 +75,9 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("token")
         )
-        _POSTINGS_MEMO[key] = tok.join(kept, "token").cache()
-    return _POSTINGS_MEMO[key]
+        return tok.join(kept, "token").cache()
+
+    return session_memo(spark, ("postings", sf_dir), build)
 
 
 @query(

@@ -16,35 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import contextlib
-
 from presto_truffle_spark.catalog import load_table, register_views
 from presto_truffle_spark.registry import query
-
-
-@contextlib.contextmanager
-def _scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set a session conf for the duration of the block, then restore the
-    prior value (or unset if it had none). ADVICE r12: an op must not
-    leave session confs mutated — a raised ``cteRecursionRowLimit`` left
-    behind disables the runaway-recursion backstop for every LATER
-    recursive query in the shared session (selfcheck sweeps, fuzz,
-    future ops). ``get(key, None)`` is presence-faithful (returns None
-    for an unset-but-defaulted key, verified empirically), so restore
-    re-unsets rather than freezing the engine default as an explicit
-    setting."""
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prior is None:
-            try:
-                spark.conf.unset(key)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(key, prior)
+from presto_truffle_spark.session import scoped_conf
 
 
 @query(
@@ -435,7 +409,7 @@ def sql_scripting_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM orders WHERE o_orderstatus = 'F'
         """
     )
-    with _scoped_conf(spark, "spark.sql.scripting.enabled", "true"):
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
         BEGIN
@@ -511,9 +485,7 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     # Σ frontier rows = n·(1 + 1/10 + 1/100 + …) < 1.12·n; the conf is
     # a JVM int, so int32-max is the largest visible opt-in available.
-    with _scoped_conf(
-        spark, "spark.sql.cteRecursionRowLimit", str((1 << 31) - 1)
-    ):
+    with scoped_conf(spark, {"spark.sql.cteRecursionRowLimit": str((1 << 31) - 1)}):
         return spark.sql(
             """
             WITH RECURSIVE chain(k, cur, d) AS (
@@ -568,7 +540,7 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contract probed: variables are resolved when spark.sql() analyzes
     the statement (eager), so the returned union is immune to the
     DROP TEMPORARY VARIABLE cleanup that follows — the op leaves NO
-    session residue (same hygiene discipline as _scoped_conf; the
+    session residue (same hygiene discipline as session.scoped_conf; the
     selfcheck SET-drift assertion stays clean because variables live
     outside the conf namespace, and we drop them anyway).
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from presto_truffle_spark.catalog import ALWAYS_BROADCAST, load_table
 from presto_truffle_spark.registry import query
+from presto_truffle_spark.session import scoped_conf
 
 
 def broadcast_if_dim(df: DataFrame, table_name: str) -> DataFrame:
@@ -204,10 +205,7 @@ def rewrite_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback to an unpruned shuffle would defeat the point), and restores
     the session. Result semantics are filter-agnostic, hence the full
     oracle; revenue sums integer cents (exact in any order)."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         li = load_table(spark, sf_dir, "lineitem")
         p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2")
         out = (
@@ -235,12 +233,6 @@ def rewrite_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "spark.sql.optimizer.runtime.bloomFilter confs"
             )
         return out.localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def binned_range_join(

@@ -17,11 +17,20 @@ session tuned so the same logical plans behave at both test scale
     (tztime.py) and results are bit-identical under any session zone
     (tools/selfcheck.py --tz). The pin only matters for sessions WE
     create; the driver owns its own.
+
+Session-state policy (``cache.py`` states the cached-frame and scratch
+half): the driver owns the session, so a query that needs a SQL conf sets
+it only inside ``scoped_conf`` and leaves the session as it found it. This
+module is the one place that reads a conf. Two session sets are unscoped
+on purpose and say why where they are made: ``nanosAsLong`` in
+``catalog.load_table`` and the UTC pin in ``streaming.windows._events_stream``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +61,31 @@ def get_spark(app_name: str = "presto_truffle_spark", cpus: str | None = None) -
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of the block, then restore each
+    key's prior value, or unset it if it had none, also when the block
+    raises.
+
+    ADVICE r12: an op must not leave session confs mutated — a raised
+    ``cteRecursionRowLimit`` left behind disables the runaway-recursion
+    backstop for every LATER recursive query in the shared session.
+    ``get(key, None)`` is presence-faithful (returns None for an
+    unset-but-defaulted key), so restore re-unsets rather than freezing
+    the engine default as an explicit setting."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                try:
+                    spark.conf.unset(k)
+                except Exception:
+                    pass
+            else:
+                spark.conf.set(k, v)

@@ -34,10 +34,10 @@ _SWEEP_AGE_S = 2 * 3600
 
 
 def _scoped_scratch(spark, name: str) -> str:
-    """applicationId-suffixed scratch dir (lakehouse_ops._scratch pattern):
-    two concurrent sessions — e.g. the driver's correctness run and a
-    selfcheck — get disjoint paths, so one can't read the other's
-    half-written parquet. Dead sessions' dirs for the same op are swept
+    """applicationId-suffixed scratch dir under ``_SCRATCH``, the one
+    ``.tmp`` root, used by every write→read query: two concurrent
+    sessions — e.g. the driver's correctness run and a selfcheck — get
+    disjoint paths, so one can't read the other's half-written parquet. Dead sessions' dirs for the same op are swept
     on entry so .tmp stays bounded — but only once OLDER than
     _SWEEP_AGE_S: an app-id mismatch alone doesn't mean the other
     session is dead, and an unconditional sweep deletes a LIVE

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from presto_truffle_spark.registry import query
+from presto_truffle_spark.session import scoped_conf
+from presto_truffle_spark.sources.io import _SCRATCH
 from presto_truffle_spark.streaming.windows import (
     _events_stream,
     checkpoint_dir,
@@ -97,25 +99,23 @@ def streaming_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "s" + uuid.uuid4().hex[:12]
     # Pin state-store partition count low for the fixture run (see
     # streaming.windows._run_to_memory for rationale).
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(sf_dir, python_stateful=True)),
-    )
-    ckpt = checkpoint_dir()
-    try:
-        q = (
-            profiled.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        drop_checkpoint(ckpt)
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": str(stream_shuffle_partitions(sf_dir, python_stateful=True))},
+    ):
+        ckpt = checkpoint_dir()
+        try:
+            q = (
+                profiled.writeStream.outputMode("update")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            drop_checkpoint(ckpt)
     return _profile_envelope(spark.table(name))
 
 
@@ -285,21 +285,18 @@ def _tws_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ProfileProcessor = _make_profile_processor()
 
     stream = _events_stream(spark, sf_dir).select("user_id", "ts", "value")
-    old_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(sf_dir, python_stateful=True)),
-    )
     name = "s" + uuid.uuid4().hex[:12]
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+            ),
+            "spark.sql.shuffle.partitions": str(
+                stream_shuffle_partitions(sf_dir, python_stateful=True)
+            ),
+        },
+    ):
         profiled = stream.groupBy("user_id").transformWithStateInPandas(
             ProfileProcessor(),
             outputStructType=_OUT_SCHEMA,
@@ -319,9 +316,6 @@ def _tws_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination()
         finally:
             drop_checkpoint(ckpt)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", old_provider)
     return spark.table(name)
 
 
@@ -353,7 +347,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     import glob as globmod
     import os as osmod
 
-    sink_root = osmod.path.join(_SCRATCH_ROOT(), "upsert_" + uuid.uuid4().hex[:12])
+    sink_root = osmod.path.join(_SCRATCH, "upsert_" + uuid.uuid4().hex[:12])
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -378,24 +372,22 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_shuffle_partitions(sf_dir, python_stateful=True)),
-    )
-    ckpt = checkpoint_dir()
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        drop_checkpoint(ckpt)
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": str(stream_shuffle_partitions(sf_dir, python_stateful=True))},
+    ):
+        ckpt = checkpoint_dir()
+        try:
+            q = (
+                agg.writeStream.outputMode("update")
+                .foreachBatch(upsert_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            drop_checkpoint(ckpt)
     versions = sorted(
         globmod.glob(osmod.path.join(sink_root, "v*")),
         key=lambda p: int(osmod.path.basename(p)[1:]),
@@ -416,10 +408,3 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     shutilmod.rmtree(sink_root, ignore_errors=True)
     return final
 
-
-def _SCRATCH_ROOT() -> str:
-    from presto_truffle_spark.streaming.windows import _SCRATCH
-    import os as osmod
-
-    osmod.makedirs(_SCRATCH, exist_ok=True)
-    return _SCRATCH

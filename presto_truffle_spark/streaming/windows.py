@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 from presto_truffle_spark.catalog import load_table
 from presto_truffle_spark.plans.rewrites import broadcast_if_dim
 from presto_truffle_spark.registry import query
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
+from presto_truffle_spark.session import scoped_conf
+from presto_truffle_spark.sources.io import _SCRATCH, _scoped_scratch
 
 
 def checkpoint_dir() -> str:
@@ -119,8 +119,7 @@ def stream_shuffle_partitions(
     sizing to its own throughput). Measured at sf0.01: 8 stores → 2
     cuts the per-key micro-batch wall ~10-25% (store setup dominates
     tiny batches; values are partition-count-independent, which the
-    oracle and the CPUS=7 layout gate verify). Overridable via
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS for cluster experiments.
+    oracle and the CPUS=7 layout gate verify).
 
     ``python_stateful`` keeps a floor of 8: for applyInPandasWithState /
     transformWithStateInPandas / Python-source streams the partition
@@ -128,9 +127,6 @@ def stream_shuffle_partitions(
     compute, and the measured A/B shows the store saving is dwarfed by
     serializing the Python work (transform_with_state 2.3 s at 8
     partitions → 7.0 s at 2)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     floor = 8 if python_stateful else 2
     if sf_dir is None:
         # Non-file sources (rate / python datasource) generate KBs per
@@ -158,24 +154,22 @@ def _run_to_memory(df: DataFrame, mode: str, sf_dir: str | None = None) -> DataF
     (stream_shuffle_partitions above)."""
     spark = df.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_partitions(sf_dir))
-    )
-    ckpt = checkpoint_dir()
-    try:
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        drop_checkpoint(ckpt)
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(stream_shuffle_partitions(sf_dir))}
+    ):
+        ckpt = checkpoint_dir()
+        try:
+            q = (
+                df.writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            drop_checkpoint(ckpt)
     return spark.table(name)
 
 
@@ -807,7 +801,6 @@ def streaming_semantic_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     import os as _os
 
     from presto_truffle_spark.operators.similarity import _dot, ann_lsh_buckets
-    from presto_truffle_spark.sources.io import _scoped_scratch
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("ev")
@@ -1175,26 +1168,25 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum("cents").cast("long").alias("total_cents"),
     )
     name = "s" + uuid.uuid4().hex[:12]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_shuffle_partitions(None, python_stateful=True))
-    )
-    ckpt = checkpoint_dir()
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        drop_checkpoint(ckpt)
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": str(stream_shuffle_partitions(None, python_stateful=True))},
+    ):
+        ckpt = checkpoint_dir()
+        try:
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            q.processAllAvailable()
+            q.stop()
+            q.awaitTermination()
+        finally:
+            drop_checkpoint(ckpt)
     return spark.table(name)
 
 

@@ -1,12 +1,16 @@
 """scoped_persist bounds live caches to one frame per call site
 (ADVICE r5: bare persists inside query builders accumulated storage
-across the 197-query battery with no unpersist point)."""
+across the 197-query battery with no unpersist point); session_memo
+shares one cached frame per key within an application; scoped_conf
+leaves the session's confs as it found them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark import StorageLevel
 
-from presto_truffle_spark.cache import _LIVE, input_bytes, scoped_persist
+from presto_truffle_spark.cache import _LIVE, input_bytes, scoped_persist, session_memo
+from presto_truffle_spark.session import scoped_conf
 
 
 def _storage_fraction_used(df) -> bool:
@@ -91,3 +95,87 @@ def test_parameterized_sql_binding_drops_cache_substitution_pinned(spark, sf_dir
         not in post._jdf.queryExecution().optimizedPlan().toString()
     )
     cached.unpersist()
+
+
+def _counting_build(spark, calls: list):
+    def build():
+        calls.append(1)
+        return spark.range(10).selectExpr("id", "id * 5 AS v").cache()
+
+    return build
+
+
+def test_session_memo_returns_the_same_frame_within_an_application(spark):
+    calls: list = []
+    first = session_memo(spark, ("test.memo", "sf_a"), _counting_build(spark, calls))
+    second = session_memo(spark, ("test.memo", "sf_a"), _counting_build(spark, calls))
+    assert second is first
+    assert len(calls) == 1
+    first.unpersist()
+    _LIVE.pop(("test.memo", "sf_a"))
+
+
+def test_session_memo_miss_evicts_other_applications(spark):
+    dead_key = ("test.memo", "dead_app")
+    dead = spark.range(10).selectExpr("id", "id * 7 AS v").cache()
+    dead.count()
+    _LIVE[dead_key] = ("application_000_dead", dead)
+    assert dead.storageLevel != StorageLevel.NONE
+
+    live = session_memo(spark, ("test.memo", "sf_a"), _counting_build(spark, []))
+    assert dead_key not in _LIVE
+    assert dead.storageLevel == StorageLevel.NONE  # unpersisted, not just dropped
+    assert _LIVE[("test.memo", "sf_a")][1] is live
+    live.unpersist()
+    _LIVE.pop(("test.memo", "sf_a"))
+
+
+def test_session_memo_keeps_distinct_keys_side_by_side(spark):
+    calls: list = []
+    a = session_memo(spark, ("test.memo", "sf_a"), _counting_build(spark, calls))
+    b = session_memo(spark, ("test.memo", "sf_b"), _counting_build(spark, calls))
+    assert a is not b
+    assert session_memo(spark, ("test.memo", "sf_a"), _counting_build(spark, calls)) is a
+    assert session_memo(spark, ("test.memo", "sf_b"), _counting_build(spark, calls)) is b
+    assert len(calls) == 2
+    for k, df in ((("test.memo", "sf_a"), a), (("test.memo", "sf_b"), b)):
+        df.unpersist()
+        _LIVE.pop(k)
+
+
+_KEY_A = "spark.prestotruffle.test.scopedA"
+_KEY_B = "spark.prestotruffle.test.scopedB"
+
+
+def test_scoped_conf_restores_a_set_key(spark):
+    spark.conf.set(_KEY_A, "before")
+    with scoped_conf(spark, {_KEY_A: "inside"}):
+        assert spark.conf.get(_KEY_A) == "inside"
+    assert spark.conf.get(_KEY_A) == "before"
+    spark.conf.unset(_KEY_A)
+
+
+def test_scoped_conf_unsets_an_unset_key(spark):
+    assert spark.conf.get(_KEY_A, None) is None
+    with scoped_conf(spark, {_KEY_A: "inside"}):
+        assert spark.conf.get(_KEY_A) == "inside"
+    assert spark.conf.get(_KEY_A, None) is None
+
+
+def test_scoped_conf_restores_when_the_body_raises(spark):
+    spark.conf.set(_KEY_A, "before")
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_conf(spark, {_KEY_A: "inside", _KEY_B: "inside"}):
+            raise RuntimeError("boom")
+    assert spark.conf.get(_KEY_A) == "before"
+    assert spark.conf.get(_KEY_B, None) is None
+    spark.conf.unset(_KEY_A)
+
+
+def test_scoped_conf_sets_and_restores_several_keys(spark):
+    spark.conf.set(_KEY_A, "before")
+    with scoped_conf(spark, {_KEY_A: "a", _KEY_B: "b"}):
+        assert (spark.conf.get(_KEY_A), spark.conf.get(_KEY_B)) == ("a", "b")
+    assert spark.conf.get(_KEY_A) == "before"
+    assert spark.conf.get(_KEY_B, None) is None
+    spark.conf.unset(_KEY_A)

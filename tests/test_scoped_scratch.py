@@ -4,7 +4,7 @@ r8 verdict: ``ann_ivfpq_index_build`` wrote its index to a FIXED path, so
 a driver correctness run and a concurrent selfcheck could read each
 other's half-written parquet. All write→read scratch call sites now go
 through ``_scoped_scratch`` (applicationId-suffixed, stale-session sweep
-on entry — the lakehouse_ops pattern).
+on entry).
 """
 
 from __future__ import annotations
@@ -56,26 +56,53 @@ def test_sweep_is_prefix_exact(spark):
     os.rmdir(other)
 
 
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                   "presto_truffle_spark")
+
+
+def _package_trees():
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                yield os.path.relpath(path, PKG), ast.parse(open(path).read())
+
+
 def test_no_query_module_uses_unscoped_scratch():
     """Every write→read query goes through the app-scoped helper; the bare
     ``_scratch`` survives only for single-session test fixtures."""
-    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "presto_truffle_spark")
-    offenders = []
-    for root, _dirs, files in os.walk(pkg):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(root, fn)
-            tree = ast.parse(open(path).read())
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Name)
-                    and node.func.id == "_scratch"
-                    # lakehouse_ops' own _scratch takes (spark, name) and is
-                    # already app-scoped; flag only the 1-arg io.py form.
-                    and len(node.args) == 1
-                ):
-                    offenders.append(f"{path}:{node.lineno}")
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _package_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "_scratch"
+    ]
     assert not offenders, f"unscoped scratch call sites: {offenders}"
+
+
+def test_session_state_has_one_home():
+    """Confs are read only by ``session.scoped_conf`` (and ``session.py``);
+    operators key no state on the application id themselves — cached frames
+    go through ``cache.session_memo``/``scoped_persist`` and scratch dirs
+    through ``io._scoped_scratch``."""
+    offenders = []
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            if (
+                rel != "session.py"
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                offenders.append(f"{rel}:{node.lineno} reads a conf")
+            if (
+                rel.startswith("operators" + os.sep)
+                and isinstance(node, ast.Attribute)
+                and node.attr == "applicationId"
+            ):
+                offenders.append(f"{rel}:{node.lineno} reads applicationId")
+    assert not offenders, offenders

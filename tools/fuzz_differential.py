@@ -2861,14 +2861,14 @@ def run_map_lastwin_case(
         a direct twin while the other three pair against a DuckDB map
         CONSTRUCTED with the known-surviving values (the fork pin,
         expressed as an expectation);
-      * the conf is applied via the _scoped_conf discipline AROUND the
+      * the conf is applied via session.scoped_conf AROUND the
         collect (Spark SQL is lazy — setting it only at build time
         would fuzz the wrong policy) and restored after, so the shared
         session never leaks LAST_WIN into later cases/queries.
 
     Map comparison is canonical-string only (sorted 'k=v' join), same
     as the str_map family — engines serialize maps differently."""
-    from presto_truffle_spark.operators.scalar_funcs import _scoped_conf
+    from presto_truffle_spark.session import scoped_conf
 
     _materialize_single(spark, con, rng, tmp, f"fuzz_{case_id}_lw")
     v1 = "CAST(abs(coalesce(m1, 0)) % 100 AS STRING)"
@@ -2953,7 +2953,7 @@ def run_map_lastwin_case(
         "SELECT k1, " + ", ".join(e[1] for e in exprs)
         + f" FROM t WHERE {where}"
     )
-    with _scoped_conf(spark, "spark.sql.mapKeyDedupPolicy", "LAST_WIN"):
+    with scoped_conf(spark, {"spark.sql.mapKeyDedupPolicy": "LAST_WIN"}):
         return _compare(spark.sql(ssql), con, dsql)
 
 
